@@ -158,3 +158,118 @@ def test_legacy_cash_flow_load(spark, tmp_path):
     r23 = [r for r in rows if r["date"] == D(2023, 12, 31)][0]
     assert r23["net_income"] == Decimal("100000000")
     assert r23["diluted_net_eps"] == Decimal("21100")
+
+
+# -- evaluate-once and release contract of load_statement ------------------
+
+def _statement_docs(spark, kind, symbols):
+    from tests.fixtures import cash_flow_page
+    from zacks_estimates_financial_statements_spark.schemas import (
+        CASH_FLOW_STATEMENT_COLS,
+    )
+
+    docs = []
+    for i, sym in enumerate(symbols):
+        if kind == "balance":
+            v = _vals(BALANCE_COLS, 100 + i)
+            html = balance_sheet_page(ANNUAL_DATES, QTR_DATES, v,
+                                      _vals(BALANCE_COLS, 500 + i))
+        else:
+            v = _vals(CASH_FLOW_STATEMENT_COLS, 100 + i)
+            html = cash_flow_page(ANNUAL_DATES, QTR_DATES, v,
+                                  _vals(CASH_FLOW_STATEMENT_COLS, 500 + i))
+        docs.append((sym, D(2024, 6, 1), html))
+    df = spark.createDataFrame(
+        docs, "act_symbol string, folder_date date, content string")
+    return parse_statements(df, kind)
+
+
+def _kind_stores(spark, root, kind):
+    from zacks_estimates_financial_statements_spark.runner import STATEMENT_KINDS
+
+    return {t: TableStore(spark, root, t) for t in STATEMENT_KINDS[kind][1]}
+
+
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _counting(spark, df):
+    """``df`` behind an identity ``mapInPandas`` that adds every row it
+    passes to the returned accumulator."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    return df.mapInPandas(counted, schema=df.schema), acc
+
+
+@pytest.mark.parametrize("kind", ["balance", "cash_flow"])
+def test_load_statement_evaluates_each_batch_once(spark, tmp_path, kind,
+                                                  monkeypatch):
+    """The parse, the typing chain and the sni chain run once per batch:
+    the sni chain's semi-join and union, and every upsert's partition
+    collect and anti-join append, read materialized rows instead of
+    replaying them — also after an upsert has appended to a table the
+    sni chain's stored side reads. The store already holds a row, so the
+    anti-join runs."""
+    stores = _kind_stores(spark, str(tmp_path), kind)
+    pipe.load_statement(_statement_docs(spark, kind, ["AAPL"]), kind, stores)
+    assert all(s.read().count() for s in stores.values())
+
+    raw = _statement_docs(spark, kind, ["AAPL", "MSFT"])
+    n_parsed = raw.count()
+    real_sni = pipe.apply_sni_chain
+    sni_rows = {}
+
+    def counted_sni(candidates, stored, k):
+        out = real_sni(candidates, stored, k)
+        out, sni_rows["acc"] = _counting(spark, out)
+        return out
+
+    monkeypatch.setattr(pipe, "apply_sni_chain", counted_sni)
+    counted_raw, parsed_acc = _counting(spark, raw)
+    before = {t: s.read().count() for t, s in stores.items()}
+    pipe.load_statement(counted_raw, kind, stores)
+    assert parsed_acc.value == n_parsed
+    # MSFT's rows landed next to AAPL's in every table; each accepted
+    # row left the sni chain once
+    gained = {t: s.read().count() - before[t] for t, s in stores.items()}
+    assert set(gained.values()) == {sni_rows["acc"].value}
+    assert sni_rows["acc"].value > 0
+
+
+@pytest.mark.parametrize("kind", ["balance", "cash_flow"])
+def test_load_statement_releases_its_caches(spark, tmp_path, kind):
+    before = _persisted_rdd_ids(spark)
+    pipe.load_statement(_statement_docs(spark, kind, ["AAPL"]), kind,
+                        _kind_stores(spark, str(tmp_path), kind))
+    assert _persisted_rdd_ids(spark) - before == set()
+
+
+@pytest.mark.parametrize("kind", ["balance", "cash_flow"])
+def test_load_statement_releases_its_caches_when_an_upsert_raises(
+        spark, tmp_path, kind, monkeypatch):
+    """An upsert failing mid fan-out (the second balance table, or the
+    only cash-flow table) propagates, and the batch caches are still
+    released."""
+    stores = _kind_stores(spark, str(tmp_path), kind)
+    real = TableStore.upsert_ignore
+    calls = {"n": 0}
+
+    def faulty(self, *a, **kw):
+        calls["n"] += 1
+        if calls["n"] >= min(2, len(stores)):
+            raise RuntimeError("injected mid-fan-out crash")
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(TableStore, "upsert_ignore", faulty)
+    raw = _statement_docs(spark, kind, ["AAPL"])
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        pipe.load_statement(raw, kind, stores)
+    assert calls["n"] == min(2, len(stores))
+    assert _persisted_rdd_ids(spark) - before == set()

@@ -33,6 +33,11 @@ Order (each regenerates its committed artifact as a side effect):
                          (``--synth-big`` builds /tmp/sf1_synth when
                          missing); super-linear onset is only visible
                          here (the r10 tfidf OOM proof)
+7c. ``perfbench_selftest`` — the ELT pipeline benchmark's self-test
+                         (``perfbench/selftest.py``): both workloads,
+                         traced and untraced, drive the real runner and
+                         must print correct results with every metric
+                         ``BENCHMARK.json`` declares (~4 min on 4 cores)
 8. ``pytest``          — the full unit/pipeline/property suite
 9. ``stamp_round N``   — byte-copies the canonical attestation to
                          ``CORRECTNESS_local_r{NN}.json`` (only with
@@ -132,6 +137,9 @@ GATES = [
                          "--small", "/root/testdata/sf0.1",
                          "--big", "/tmp/sf1_synth", "--synth-big",
                          "--top-bench", "10", "--cores-leg", "8"]),
+    # the ELT pipeline bench end to end at a tiny size: the statement,
+    # estimate and calendar loaders through the runner, outputs checked
+    ("perfbench_selftest", [sys.executable, "perfbench/selftest.py"]),
     ("pytest", [sys.executable, "-m", "pytest", "tests/", "-q"]),
 ]
 

@@ -25,6 +25,14 @@ equity); any of the three snis firing rolls back all three rows — handled
 by evaluating the chain over the concatenated compare-column set with
 per-table sni OR'd together.
 
+Materialization: each batch is evaluated once. ``load_statement``
+persists the typed candidates before the sni chain (whose symbol
+semi-join and union both read them) and checkpoints the accepted rows
+before the upserts (each upsert reads them twice: partition values, then
+the anti-join append), and releases both in ``finally`` — on success and
+when an upsert raises. The destination tables are data (``_DEST``: table
+→ column slice), so every kind takes the same persist/release path.
+
 Cast semantics: the reference has NO 'NA' handling in statement inserts —
 an uncastable cell throws and rolls back that (period, date) row. Row
 validity below reproduces that: every raw cell must either be absent
@@ -34,6 +42,7 @@ validity below reproduces that: every raw cell must either be absent
 from __future__ import annotations
 
 import datetime
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,17 +56,27 @@ from zacks_estimates_financial_statements_spark.schemas import (
     CASH_FLOW_STATEMENT_COLS,
     INCOME_STATEMENT_COLS,
 )
+from zacks_estimates_financial_statements_spark.util import release_checkpoint
 
 _DATE_FMT = {"income": "M/dd/yy", "balance": "M/dd/yyyy",
              "cash_flow": "M/dd/yyyy", "cash_flow_legacy": "M/dd/yyyy"}
 
-_KIND_COLS = {
-    "income": INCOME_STATEMENT_COLS,
-    "balance": (BALANCE_SHEET_ASSETS_COLS + BALANCE_SHEET_LIABILITIES_COLS
-                + BALANCE_SHEET_EQUITY_COLS),
-    "cash_flow": CASH_FLOW_STATEMENT_COLS,
-    "cash_flow_legacy": CASH_FLOW_STATEMENT_COLS,
+_PK = ["act_symbol", "date", "period"]
+
+#: statement kind → {destination table: its column slice of the typed
+#: row}. Each slice is also that table's sni compare set; a kind with
+#: several tables lands them all from one accepted row.
+_DEST = {
+    "income": {"income_statement": INCOME_STATEMENT_COLS},
+    "balance": {"balance_sheet_assets": BALANCE_SHEET_ASSETS_COLS,
+                "balance_sheet_liabilities": BALANCE_SHEET_LIABILITIES_COLS,
+                "balance_sheet_equity": BALANCE_SHEET_EQUITY_COLS},
+    "cash_flow": {"cash_flow_statement": CASH_FLOW_STATEMENT_COLS},
+    "cash_flow_legacy": {"cash_flow_statement": CASH_FLOW_STATEMENT_COLS},
 }
+
+_KIND_COLS = {kind: [c for cols in dest.values() for c in cols]
+              for kind, dest in _DEST.items()}
 
 #: unscaled (per-share) columns per kind — everything else is ×1e6 (F7)
 _UNSCALED = {
@@ -99,13 +118,9 @@ def typed_candidates(raw: DataFrame, kind: str) -> DataFrame:
 
 def _sni_compare_sets(kind: str) -> list[list[str]]:
     """Column groups with independent sni guards whose failures share one
-    transaction. income/cash_flow: one group; balance: three (assets,
-    liabilities, equity) OR'd together."""
-    if kind == "balance":
-        return [list(BALANCE_SHEET_ASSETS_COLS),
-                list(BALANCE_SHEET_LIABILITIES_COLS),
-                list(BALANCE_SHEET_EQUITY_COLS)]
-    return [list(_KIND_COLS[kind])]
+    transaction: one per destination table. income/cash_flow: one group;
+    balance: three (assets, liabilities, equity) OR'd together."""
+    return [list(cols) for cols in _DEST[kind].values()]
 
 
 def _prior_date(d: datetime.date, period: str) -> datetime.date:
@@ -207,44 +222,40 @@ def apply_sni_chain(candidates: DataFrame, stored: DataFrame,
 def load_statement(raw: DataFrame, kind: str,
                    stores: dict[str, TableStore]) -> None:
     """One loader run: type the batch, run the sni chain against stored
-    state, split into destination tables, upsert each."""
-    candidates = typed_candidates(raw, kind)
+    state, split into destination tables, upsert each.
 
-    if kind == "balance":
-        # stored compare state: join the three balance tables back into the
-        # page-shaped wide row on the shared PK. INNER joins, not outer
-        # (r10 crash-recovery find): a PK counts as "landed" (sni chain's
-        # ON CONFLICT DO NOTHING) only when ALL THREE tables carry it —
-        # a mid-fan-out crash leaves a PARTIAL row (e.g. assets written,
-        # liabilities/equity not), and an outer-joined wide row made the
-        # replay skip the candidate, stranding the row incomplete
-        # forever. With inner joins the partial PK is not "landed", the
-        # replay re-accepts the candidate, the already-written table's
-        # PK upsert is a no-op, and the missing tables complete — the
-        # module recovery contract tests/test_streaming.py pins. In
-        # crash-free operation the three tables always carry equal PK
-        # sets, so inner == outer there.
-        a = stores["balance_sheet_assets"].read()
-        li = stores["balance_sheet_liabilities"].read()
-        eq = stores["balance_sheet_equity"].read()
-        pk = ["act_symbol", "date", "period"]
-        stored = a.join(li, pk).join(eq, pk)
-        accepted = apply_sni_chain(candidates, stored, kind)
-        accepted = accepted.persist()
-        try:
-            accepted.count()
-            base = ["act_symbol", "date", "period"]
-            stores["balance_sheet_assets"].upsert_ignore(
-                accepted.select(*base, *BALANCE_SHEET_ASSETS_COLS))
-            stores["balance_sheet_liabilities"].upsert_ignore(
-                accepted.select(*base, *BALANCE_SHEET_LIABILITIES_COLS))
-            stores["balance_sheet_equity"].upsert_ignore(
-                accepted.select(*base, *BALANCE_SHEET_EQUITY_COLS))
-        finally:
-            accepted.unpersist()
-        return
-
-    table = "income_statement" if kind == "income" else "cash_flow_statement"
-    stored = stores[table].read()
-    accepted = apply_sni_chain(candidates, stored, kind)
-    stores[table].upsert_ignore(accepted)
+    The typed candidates are persisted and the accepted rows
+    checkpointed, so the parse, the typing chain and the sni chain run
+    once per batch however many jobs read them; both are released in
+    ``finally``."""
+    dest = _DEST[kind]
+    # stored compare state: join the three balance tables back into the
+    # page-shaped wide row on the shared PK. INNER joins, not outer
+    # (r10 crash-recovery find): a PK counts as "landed" (sni chain's
+    # ON CONFLICT DO NOTHING) only when ALL THREE tables carry it —
+    # a mid-fan-out crash leaves a PARTIAL row (e.g. assets written,
+    # liabilities/equity not), and an outer-joined wide row made the
+    # replay skip the candidate, stranding the row incomplete
+    # forever. With inner joins the partial PK is not "landed", the
+    # replay re-accepts the candidate, the already-written table's
+    # PK upsert is a no-op, and the missing tables complete — the
+    # module recovery contract tests/test_streaming.py pins. In
+    # crash-free operation the three tables always carry equal PK
+    # sets, so inner == outer there.
+    stored = functools.reduce(lambda left, right: left.join(right, _PK),
+                              [stores[t].read() for t in dest])
+    candidates = accepted = None
+    try:
+        candidates = typed_candidates(raw, kind).persist()
+        # a checkpoint, not persist(): the accepted rows read the
+        # destination tables (stored side), and every upsert's append
+        # drops the cached data of plans that read the table it wrote,
+        # so a cached copy would rerun the sni chain for each later table
+        accepted = apply_sni_chain(candidates, stored, kind).localCheckpoint()
+        for table, cols in dest.items():
+            stores[table].upsert_ignore(accepted.select(*_PK, *cols))
+    finally:
+        if accepted is not None:
+            release_checkpoint(accepted)
+        if candidates is not None:
+            candidates.unpersist()

@@ -2,13 +2,17 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import Column, SparkSession, functions as F
 
 _SHIPPED_ATTR = "_zacks_estimates_financial_statements_spark_pyfiles_shipped"
+#: serializes the check-and-ship in ensure_package_on_executors
+_SHIP_LOCK = threading.Lock()
 
 #: Exact-aggregation domain bound (r12, --extreme-rate contract fuzz).
 #: The engine routes exact double aggregation through decimal(38,6)
@@ -82,23 +86,45 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     uninstalled Python package.
     """
     sc = spark.sparkContext
-    if getattr(sc, _SHIPPED_ATTR, False):
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    zip_path = os.path.join(tempfile.gettempdir(),
-                            f"{pkg_name}-{os.getpid()}.zip")
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(pkg_name,
-                                           os.path.relpath(full, pkg_dir))
-                        zf.write(full, rel)
-    sc.addPyFile(zip_path)
-    setattr(sc, _SHIPPED_ATTR, True)
+    # loaders call this from concurrent threads (runner.run_statements):
+    # one thread ships, and the zip appears under its final name only
+    # once complete — executors reject a re-added file whose contents
+    # changed
+    with _SHIP_LOCK:
+        if getattr(sc, _SHIPPED_ATTR, False):
+            return
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        pkg_name = os.path.basename(pkg_dir)
+        zip_path = os.path.join(tempfile.gettempdir(),
+                                f"{pkg_name}-{os.getpid()}.zip")
+        if not os.path.exists(zip_path):
+            fd, tmp = tempfile.mkstemp(suffix=".zip.tmp",
+                                       dir=os.path.dirname(zip_path))
+            try:
+                with os.fdopen(fd, "wb") as fh, \
+                        zipfile.ZipFile(fh, "w", zipfile.ZIP_DEFLATED) as zf:
+                    for root, _dirs, files in os.walk(pkg_dir):
+                        for f in files:
+                            if f.endswith(".py"):
+                                full = os.path.join(root, f)
+                                rel = os.path.join(
+                                    pkg_name, os.path.relpath(full, pkg_dir))
+                                zf.write(full, rel)
+                os.replace(tmp, zip_path)
+            except BaseException:
+                with contextlib.suppress(OSError):
+                    os.unlink(tmp)
+                raise
+        sc.addPyFile(zip_path)
+        setattr(sc, _SHIPPED_ATTR, True)
+
+
+def release_checkpoint(df) -> None:
+    """Drop the blocks behind a ``localCheckpoint``-ed DataFrame now.
+    Its ``unpersist()`` does nothing: the checkpoint is the persisted RDD
+    of a ``LogicalRDD``, not a cache-manager entry, so it would otherwise
+    stay until the JVM garbage-collects that RDD."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def broadcast_threshold_bytes(spark: SparkSession) -> int:
