@@ -17,9 +17,10 @@ which is the standard way to benchmark Spark plans honestly.
 
 Two more honesty rules (round 8):
 
-- **Cold cache per measurement.** After each timed query the harness
-  calls the query's ``release_cache()`` hook (if any) and clears the
-  catalog cache: Spark's CacheManager matches persisted plans by
+- **Cold cache per measurement.** Each query runs inside
+  ``util.query_scope``, which on exit clears the catalog cache and
+  unpersists every RDD (cache or local checkpoint) the query
+  persisted: Spark's CacheManager matches persisted plans by
   CANONICALIZED form, so a query that persists internally silently
   reuses the PREVIOUS pass's cache and its per-pass times form a
   staircase whose median measures N, not the code (measured:
@@ -262,6 +263,7 @@ def main() -> None:
     spec.loader.exec_module(mod)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
+    from zacks_estimates_financial_statements_spark.util import query_scope
     spark = get_spark(app_name="zacks-spark-bench",
                       master=f"local[{cpus}]",
                       extra_conf={"spark.ui.enabled": "false",
@@ -295,16 +297,12 @@ def main() -> None:
     for name in tracked:
         t0 = time.time()
         try:
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            release = getattr(df, "release_cache", None)
-            if release is not None:
-                release()
+            with query_scope(spark):
+                qs[name](spark, sf_dir).write.format("noop") \
+                    .mode("overwrite").save()
         except Exception as exc:  # noqa: BLE001 — warm pass is best-effort
             print(f"# warm {name}: FAILED {str(exc)[:120]}",
                   file=sys.stderr)
-        finally:
-            spark.catalog.clearCache()
         print(f"# warm {name}: {time.time() - t0:.2f}s (untimed)",
               file=sys.stderr)
     samples: dict[str, list[float]] = {name: [] for name in tracked}
@@ -318,26 +316,20 @@ def main() -> None:
         print(f"# pass {it + 1}/{n_iters} calibration: "
               f"{cal_per_pass[-1]:.2f}s", file=sys.stderr)
         for name in tracked:
-            fn = qs[name]
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
+            # Honesty: a query must not inherit the previous pass's
+            # caches or checkpoints — the scope releases them. Without
+            # it, a cache-carrying query's per-pass times form a
+            # staircase (measured: perplexity_buckets 3.7 -> 1.8 ->
+            # 0.8 within one run) and its median measures N, not the
+            # code.
+            with query_scope(spark):
+                t0 = time.time()
+                qs[name](spark, sf_dir).write.format("noop") \
+                    .mode("overwrite").save()
+                dt = time.time() - t0
             samples[name].append(dt)
             print(f"# pass {it + 1}/{n_iters} {name}: {dt:.2f}s",
                   file=sys.stderr)
-            # Honesty: a query must not inherit the previous pass's
-            # caches. Functions with an explicit unpersist contract
-            # (perplexity_buckets, dsir_select) release here; the
-            # catalog clear catches persists without a hook (e.g. an
-            # IVF index built inside the query). Without this, a
-            # cache-carrying query's per-pass times form a staircase
-            # (measured: perplexity_buckets 3.7 -> 1.8 -> 0.8 within
-            # one run) and its median measures N, not the code.
-            release = getattr(df, "release_cache", None)
-            if release is not None:
-                release()
-            spark.catalog.clearCache()
     cal_sec = round(statistics.median(cal_per_pass), 3)
 
     timings = {name: round(statistics.median(s), 3)

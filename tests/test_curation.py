@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from zacks_estimates_financial_statements_spark.operators import curation
+from zacks_estimates_financial_statements_spark.util import query_scope
 
 
 @pytest.fixture(scope="module")
@@ -674,6 +675,20 @@ def test_bpe_train_matches_reference_implementation(spark):
     assert TK.bpe_train(df, "text", n_merges=8, max_local_vocab=0) == want
 
 
+def test_bpe_train_rejects_min_word_count_with_words(spark):
+    """``words=`` replaces the trainer's own word count, so a
+    ``min_word_count`` passed alongside it would be ignored: it raises
+    instead (pruning belongs to the ``bpe_word_counts`` call)."""
+    from zacks_estimates_financial_statements_spark.functions import tokenize as TK
+
+    df = spark.createDataFrame([("low low lower newest",)], "text string")
+    wc = TK.bpe_word_counts(df, "text")
+    with pytest.raises(ValueError, match="min_word_count"):
+        TK.bpe_train(df, "text", n_merges=2, min_word_count=2, words=wc)
+    assert TK.bpe_train(df, "text", n_merges=2, words=wc) == \
+        TK.bpe_train(df, "text", n_merges=2)
+
+
 def test_char_entropy_and_compression_ratio_rank_garbage(spark):
     """Both quality signals must separate natural-ish text from
     repeated-character padding, and entropy must match the closed
@@ -1075,12 +1090,16 @@ def test_train_classifier_releases_training_caches(spark):
     assert after - before <= 2, (before, after)
 
 
-def test_dsir_and_perplexity_release_cache_handles(spark):
+def test_dsir_and_perplexity_caches_release_in_query_scope(spark,
+                                                           persisted):
     raw, target = _dsir_corpus(spark)
-    sel = curation.dsir_select(raw, target, "doc_id", "text",
-                               n=5, buckets=512)
-    ids = sorted(r["doc_id"] for r in sel.collect())
-    sel.release_cache()
+    before = persisted()
+    with query_scope(spark):
+        sel = curation.dsir_select(raw, target, "doc_id", "text",
+                                   n=5, buckets=512)
+        ids = sorted(r["doc_id"] for r in sel.collect())
+        assert persisted() - before
+    assert persisted() - before == set()
     # post-release the plan still recomputes correctly, just un-cached
     assert sorted(r["doc_id"] for r in sel.collect()) == ids
 
@@ -1088,9 +1107,11 @@ def test_dsir_and_perplexity_release_cache_handles(spark):
         [(i, "spark table join filter group " * (1 + i % 3), "en")
          for i in range(9)],
         "doc_id bigint, text string, lang string")
-    pb = curation.perplexity_buckets(docs, "doc_id", "text", "lang")
-    n = pb.count()
-    pb.release_cache()
+    with query_scope(spark):
+        pb = curation.perplexity_buckets(docs, "doc_id", "text", "lang")
+        n = pb.count()
+        assert persisted() - before
+    assert persisted() - before == set()
     assert pb.count() == n
 
 
@@ -1956,10 +1977,10 @@ def test_url_features_panel(spark):
     assert out[4]["is_index"] and out[4]["digit_frac"] > 0.5
 
 
-def test_unigram_caches_match_uncached_and_release(spark):
+def test_unigram_caches_match_uncached_and_release(spark, persisted):
     """r13 persists: the opt-in freqs cache in unigram_seed_vocab and
-    the vocab cache in unigram_encode change no values, and the
-    chained release hook drops them without touching lineage."""
+    the vocab cache in unigram_encode change no values, and
+    ``query_scope`` drops them without touching lineage."""
     from zacks_estimates_financial_statements_spark.functions import tokenize as TK
 
     df = spark.createDataFrame(
@@ -1967,15 +1988,13 @@ def test_unigram_caches_match_uncached_and_release(spark):
         "doc_id bigint, text string")
     plain = sorted(map(tuple, TK.unigram_seed_vocab(
         df, "text", vocab_size=4, max_piece_len=3).collect()))
-    seed = TK.unigram_seed_vocab(df, "text", vocab_size=4,
-                                 max_piece_len=3, cache_freqs=True)
-    assert sorted(map(tuple, seed.collect())) == plain
-    enc = TK.unigram_encode(df, "doc_id", "text", seed)
-    assert callable(getattr(enc, "release_cache", None))
-    cached_rows = sorted(map(tuple, enc.collect()))
-    enc.release_cache()  # chains: vocab + the seed's freqs
+    before = persisted()
+    with query_scope(spark):
+        seed = TK.unigram_seed_vocab(df, "text", vocab_size=4,
+                                     max_piece_len=3, cache_freqs=True)
+        assert sorted(map(tuple, seed.collect())) == plain
+        enc = TK.unigram_encode(df, "doc_id", "text", seed)
+        cached_rows = sorted(map(tuple, enc.collect()))
+        assert persisted() - before
+    assert persisted() - before == set()
     assert sorted(map(tuple, enc.collect())) == cached_rows
-    # the uncached seed carries no hook
-    assert getattr(TK.unigram_seed_vocab(
-        df, "text", vocab_size=4, max_piece_len=3),
-        "release_cache", None) is None

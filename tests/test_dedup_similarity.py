@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from zacks_estimates_financial_statements_spark.operators import dedup, similarity
+from zacks_estimates_financial_statements_spark.util import query_scope
 
 
 @pytest.fixture(scope="module")
@@ -1197,17 +1198,19 @@ def test_minhash_pairs_from_index_matches_sweep(docs):
     assert derived == direct
 
 
-def test_cdc_chunks_release_cache_hook(spark):
+def test_cdc_chunks_cache_releases_in_query_scope(spark, persisted):
     """r13 persist: cdc_chunks caches its tokenized relation across
-    the winner-resolution and chunking consumers and must expose the
-    standard release hook; rows are identical before and after
-    release (the hook only drops the cache, never the lineage)."""
+    the winner-resolution and chunking consumers; ``query_scope``
+    releases it, and rows are identical before and after release
+    (releasing drops the cache, never the lineage)."""
     df = spark.createDataFrame(
         [(i, f"alpha beta w{i} gamma delta epsilon zeta eta theta "
              f"iota kappa lambda mu nu xi omicron pi rho")
          for i in range(30)], "doc_id bigint, text string")
-    out = dedup.cdc_chunks(df, "doc_id", "text", w=3, avg_words=4)
-    assert callable(getattr(out, "release_cache", None))
-    cached_rows = sorted(map(tuple, out.collect()))
-    out.release_cache()
+    before = persisted()
+    with query_scope(spark):
+        out = dedup.cdc_chunks(df, "doc_id", "text", w=3, avg_words=4)
+        cached_rows = sorted(map(tuple, out.collect()))
+        assert persisted() - before
+    assert persisted() - before == set()
     assert sorted(map(tuple, out.collect())) == cached_rows

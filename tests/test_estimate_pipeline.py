@@ -69,6 +69,26 @@ def test_full_fanout_and_idempotence(spark, stores):
     assert stores["rank_score"].read().count() == 1
 
 
+@pytest.mark.parametrize("parallel", [False, True])
+def test_load_estimates_releases_its_caches_when_an_upsert_raises(
+        spark, stores, parallel, monkeypatch, persisted):
+    """An upsert failing mid fan-out propagates, and the parsed and
+    validated batch caches are still released."""
+    real = TableStore.upsert_ignore
+
+    def faulty(self, *a, **kw):
+        if self.name == TABLES[1]:
+            raise RuntimeError("injected mid-fan-out crash")
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(TableStore, "upsert_ignore", faulty)
+    parsed = _parsed(spark, [("AAPL", D(2025, 1, 15), estimate_page())])
+    before = persisted()
+    with pytest.raises(RuntimeError, match="injected"):
+        pipe.load_estimates(parsed, stores, parallel=parallel)
+    assert persisted() - before == set()
+
+
 def test_invalid_document_contributes_nothing(spark, stores):
     # rank "NA" -> zacks.rank cast would fail -> whole document rolled back
     bad = estimate_page(rank_text="NANA")  # substring(2) -> "NA"

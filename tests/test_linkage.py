@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from zacks_estimates_financial_statements_spark.operators import linkage
+from zacks_estimates_financial_statements_spark.util import query_scope
 
 CLEAN = ["golden retriever", "labrador puppy", "siamese cat",
          "persian cat", "parrot cage", "hamster wheel"]
@@ -52,17 +53,19 @@ def test_best_match_deterministic_fold(spark):
     assert got == {1: (11, 1, 3), 2: (20, 0, 1)}
 
 
-def test_fuzzy_join_release_cache_hook(spark):
+def test_fuzzy_join_caches_release_in_query_scope(spark, persisted):
     """r13 persist: fuzzy_join caches its distinct-key relations and
-    the matched pair set (each referenced 2-3x in the final join) and
-    must expose the standard release hook; rows are identical before
-    and after release (the hook only drops caches, never lineage)."""
+    the matched pair set (each referenced 2-3x in the final join);
+    ``query_scope`` releases them, and rows are identical before and
+    after release (releasing drops caches, never lineage)."""
     dirty = spark.createDataFrame(
         [(i * 10, n[:-1]) for i, n in enumerate(CLEAN)],
         "did long, dname string")
-    pairs = linkage.fuzzy_join(dirty, _clean_df(spark), "dname", "cname",
-                               max_dist=1)
-    assert callable(getattr(pairs, "release_cache", None))
-    cached_rows = sorted(map(tuple, pairs.collect()))
-    pairs.release_cache()
+    before = persisted()
+    with query_scope(spark):
+        pairs = linkage.fuzzy_join(dirty, _clean_df(spark), "dname",
+                                   "cname", max_dist=1)
+        cached_rows = sorted(map(tuple, pairs.collect()))
+        assert persisted() - before
+    assert persisted() - before == set()
     assert sorted(map(tuple, pairs.collect())) == cached_rows

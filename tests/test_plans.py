@@ -4,21 +4,7 @@ refactor can't silently regress them."""
 
 from __future__ import annotations
 
-import importlib.util
 import os
-
-import pytest
-
-
-@pytest.fixture(scope="module")
-def entry():
-    spec = importlib.util.spec_from_file_location(
-        "entry_for_plans", os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def _plan(entry, spark, sf_dir, name: str) -> str:

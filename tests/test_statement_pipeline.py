@@ -190,10 +190,6 @@ def _kind_stores(spark, root, kind):
     return {t: TableStore(spark, root, t) for t in STATEMENT_KINDS[kind][1]}
 
 
-def _persisted_rdd_ids(spark):
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-
 def _counting(spark, df):
     """``df`` behind an identity ``mapInPandas`` that adds every row it
     passes to the returned accumulator."""
@@ -243,16 +239,17 @@ def test_load_statement_evaluates_each_batch_once(spark, tmp_path, kind,
 
 
 @pytest.mark.parametrize("kind", ["balance", "cash_flow"])
-def test_load_statement_releases_its_caches(spark, tmp_path, kind):
-    before = _persisted_rdd_ids(spark)
+def test_load_statement_releases_its_caches(spark, tmp_path, kind,
+                                            persisted):
+    before = persisted()
     pipe.load_statement(_statement_docs(spark, kind, ["AAPL"]), kind,
                         _kind_stores(spark, str(tmp_path), kind))
-    assert _persisted_rdd_ids(spark) - before == set()
+    assert persisted() - before == set()
 
 
 @pytest.mark.parametrize("kind", ["balance", "cash_flow"])
 def test_load_statement_releases_its_caches_when_an_upsert_raises(
-        spark, tmp_path, kind, monkeypatch):
+        spark, tmp_path, kind, monkeypatch, persisted):
     """An upsert failing mid fan-out (the second balance table, or the
     only cash-flow table) propagates, and the batch caches are still
     released."""
@@ -268,8 +265,8 @@ def test_load_statement_releases_its_caches_when_an_upsert_raises(
 
     monkeypatch.setattr(TableStore, "upsert_ignore", faulty)
     raw = _statement_docs(spark, kind, ["AAPL"])
-    before = _persisted_rdd_ids(spark)
+    before = persisted()
     with pytest.raises(RuntimeError, match="injected"):
         pipe.load_statement(raw, kind, stores)
     assert calls["n"] == min(2, len(stores))
-    assert _persisted_rdd_ids(spark) - before == set()
+    assert persisted() - before == set()

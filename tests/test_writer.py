@@ -116,6 +116,27 @@ def test_delete_where_size_gated_broadcast(spark, store):
         hinted._jdf.queryExecution().logical().toString()
 
 
+@pytest.mark.parametrize("threshold", ["10485760", "-1"])
+def test_delete_where_releases_its_checkpoint(spark, store, threshold,
+                                              persisted):
+    """The condemned keys' localCheckpoint (util.maybe_broadcast) is
+    released once the rewrite is done, hinted or not."""
+    store.upsert_ignore(spark.createDataFrame(
+        [("AAPL", D(2024, 5, 1), None), ("MSFT", D(2024, 5, 2), None)],
+        "act_symbol string, date date, `when` string"))
+    condemned = spark.createDataFrame([("AAPL", D(2024, 5, 1))],
+                                      "act_symbol string, date date")
+    before = persisted()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    try:
+        store.delete_where(condemned, on=["act_symbol", "date"])
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert persisted() - before == set()
+    assert _rows(store) == [("MSFT", D(2024, 5, 2), None)]
+
+
 def test_split_valid_enum_and_not_null(spark):
     df = spark.createDataFrame(
         [("AAPL", D(2024, 5, 1), "After market close"),   # valid

@@ -32,6 +32,7 @@ def main() -> int:
     spec.loader.exec_module(mod)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
+    from zacks_estimates_financial_statements_spark.util import query_scope
     spark = get_spark(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
                       extra_conf={"spark.ui.enabled": "false",
                                   "spark.ui.showConsoleProgress": "false"})
@@ -40,9 +41,11 @@ def main() -> int:
     for name in names:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         try:
-            df = qs[name](spark, sf_dir)
-            txt = spark._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
+            # no later query's plan may read this query's caches
+            with query_scope(spark):
+                txt = spark._jvm.PythonSQLUtils.explainString(
+                    qs[name](spark, sf_dir)._jdf.queryExecution(),
+                    "formatted")
         except Exception as exc:  # noqa: BLE001
             txt = f"ERROR building {name}: {exc}\n"
             rc = 1

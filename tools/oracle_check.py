@@ -104,6 +104,7 @@ def main() -> int:
     spec.loader.exec_module(mod)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
+    from zacks_estimates_financial_statements_spark.util import query_scope
     extra = {"spark.ui.enabled": "false",
              "spark.ui.showConsoleProgress": "false"}
     # Honored for oversized runs only (the synth-sf1 attestation OOMs
@@ -169,28 +170,17 @@ def main() -> int:
 
     for name in names:
         t0 = time.time()
-        sdf = None
         try:
-            sdf = qs[name](spark, sf_dir)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
+            # no later query may reuse this query's caches
+            with query_scope(spark):
+                sdf = qs[name](spark, sf_dir)
+                srows = [tuple(r) for r in sdf.collect()]
+                scols = sdf.columns
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {str(exc)[:300]}")
             record(name, err=f"spark: {str(exc)[:200]}")
             failures += 1
             continue
-        finally:
-            # bench.py's honesty rule, applied to the battery too: a
-            # query must not leave its internal persist registered for
-            # a LATER query's canonically-equal subtree to silently
-            # reuse (CacheManager matches by canonicalized plan)
-            release = getattr(sdf, "release_cache", None)
-            if release is not None:
-                try:
-                    release()
-                except Exception:  # noqa: BLE001
-                    pass
-            spark.catalog.clearCache()
         if name not in osql:
             print(f"SKIP {name}: no oracle (rows={len(srows)})")
             record(name, rows_match=len(srows) >= 0,

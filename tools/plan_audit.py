@@ -264,6 +264,7 @@ def main() -> int:
     spec.loader.exec_module(mod)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
+    from zacks_estimates_financial_statements_spark.util import query_scope
     spark = get_spark(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
                       extra_conf={"spark.ui.enabled": "false",
                                   "spark.ui.showConsoleProgress": "false"})
@@ -271,26 +272,16 @@ def main() -> int:
     rows = []
     bad = 0
     for name, fn in mod.queries().items():
-        df = None
         try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            # later queries are audited as REAL plans, not this cache
+            with query_scope(spark):
+                plan = fn(spark, sf_dir)._jdf.queryExecution() \
+                    .executedPlan().toString()
             a = audit(plan, name)
         except Exception as exc:  # noqa: BLE001
             a = {"bhj": "-", "smj": "-", "bnlj": "-", "exchanges": "-",
                  "reused": "-", "codegen": "-", "pushed": "-", "lam": "-",
                  "gw": "-", "flags": f"ERR:{str(exc)[:40]}"}
-        finally:
-            # drop per-query persist registrations so a later query's
-            # canonically-equal subtree is audited as its REAL plan,
-            # not as an InMemoryTableScan of this query's cache
-            release = getattr(df, "release_cache", None)
-            if release is not None:
-                try:
-                    release()
-                except Exception:  # noqa: BLE001
-                    pass
-            spark.catalog.clearCache()
         if a["flags"] != "-":
             bad += 1
         rows.append((name, a))

@@ -37,6 +37,7 @@ def main() -> int:
     spec.loader.exec_module(mod)
 
     from zacks_estimates_financial_statements_spark.session import get_spark
+    from zacks_estimates_financial_statements_spark.util import query_scope
     spark = get_spark(app_name="zacks-spark-stage-probe",
                       master=f"local[{cpus}]",
                       extra_conf={"spark.ui.showConsoleProgress": "false",
@@ -51,15 +52,11 @@ def main() -> int:
             pass
 
     def _run() -> float:
-        t0 = time.time()
-        df = qs[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        release = getattr(df, "release_cache", None)
-        if release is not None:
-            release()
-        spark.catalog.clearCache()
-        return dt
+        with query_scope(spark):
+            t0 = time.time()
+            qs[name](spark, sf_dir).write.format("noop") \
+                .mode("overwrite").save()
+            return time.time() - t0
 
     # warm passes (JIT/codegen), then the measured pass
     for i in range(n_passes):

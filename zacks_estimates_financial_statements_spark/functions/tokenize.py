@@ -206,9 +206,16 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 6,
     Returns the ordered merge list ``[(left, right), ...]`` (may be
     shorter than ``n_merges`` if the pair space is exhausted). Feed
     the resulting pieces to ``wordpiece_encode`` as the vocabulary.
+
+    ``words=`` (a ``bpe_word_counts`` relation) must be unique on
+    ``w`` and unpruned; ``min_word_count != 1`` alongside it raises
+    ``ValueError`` rather than being ignored.
     """
-    if words is None:   # ``words=``: see bpe_word_counts
+    if words is None:
         words = bpe_word_counts(df, text_col, min_word_count)
+    elif min_word_count != 1:
+        raise ValueError("min_word_count is ignored when words= is "
+                         "given; prune in bpe_word_counts instead")
     seg = (words.select(
         "cnt",
         F.concat(F.lit("  "),
@@ -315,19 +322,19 @@ def bpe_encode(df: DataFrame, id_col: str, text_col: str,
     (AQE broadcasts the encoded vocab when it fits), one per-doc
     reassembly. Returns ``(id, pieces array<string>, n_pieces)`` —
     docs with no words get an empty array.
+
+    ``words=`` (a ``bpe_word_counts`` relation) must be unique on
+    ``w`` and unpruned: the occurrence join is inner, so a duplicate
+    ``w`` repeats its pieces and a pruned word drops its occurrences.
     """
     w = df.select(F.col(id_col),
                   F.posexplode(_words(F.col(text_col)))
                   .alias("__wp", "__w"))
-    # ``words=`` (r14): a caller that already built the (w, cnt)
-    # vocabulary relation (bpe_word_counts, typically persisted and
-    # shared with bpe_train) supplies it here, replacing this leg's
-    # corpus tokenize + distinct exchange with a cache read. It MUST
-    # cover every corpus word (min_word_count=1) — the occurrence
-    # join below is inner, so a pruned vocabulary would silently drop
-    # rare-word occurrences from the encoding. The
-    # occurrence leg ``w`` above still tokenizes once — it needs the
-    # per-document positions no vocabulary relation carries.
+    # ``words=`` (r14): the caller's (w, cnt) relation, typically
+    # persisted and shared with bpe_train, replaces this leg's corpus
+    # tokenize + distinct exchange with a cache read. The occurrence
+    # leg ``w`` above still tokenizes once — it needs the per-document
+    # positions no vocabulary relation carries.
     vocab_src = (w.select(F.col("__w").alias("w")).distinct()
                  if words is None else words.select("w"))
     seg = vocab_src.withColumn(
@@ -381,6 +388,16 @@ def unigram_seed_vocab(df: DataFrame, text_col: str,
 
     Output: ``(piece, freq, cost)``.
     """
+    return _seed_vocab(df, text_col, vocab_size, max_piece_len,
+                       cache_freqs)[0]
+
+
+def _seed_vocab(df: DataFrame, text_col: str, vocab_size: int,
+                max_piece_len: int,
+                cache_freqs: bool) -> tuple[DataFrame, DataFrame]:
+    """``unigram_seed_vocab`` plus the substring-frequency relation it
+    ranks (persisted when ``cache_freqs``), so a caller that
+    materializes the vocab can release that cache at once."""
     if vocab_size < 0 or max_piece_len < 2:
         raise ValueError(
             f"need vocab_size >= 0 and max_piece_len >= 2, got "
@@ -413,7 +430,8 @@ def unigram_seed_vocab(df: DataFrame, text_col: str,
     # at sf0.1 (measured +0.5 s: the parallel replays hide behind
     # local cores while the cache write/read cost is fixed) — callers
     # that re-reference the vocab (unigram_encode, unigram_train)
-    # enable it and release via the standard ``release_cache`` hook.
+    # enable it; the cache lives until the caller's
+    # ``util.query_scope`` exits (unigram_train releases it early).
     if cache_freqs:
         freqs = freqs.persist(StorageLevel.MEMORY_AND_DISK)
     chars = freqs.filter(F.length("piece") == 1)
@@ -426,9 +444,7 @@ def unigram_seed_vocab(df: DataFrame, text_col: str,
            .select("piece", "freq",
                    F.round(-F.log(F.col("freq") / F.col("__tot")), 6)
                    .alias("cost")))
-    if cache_freqs:
-        out.release_cache = freqs.unpersist
-    return out
+    return out, freqs
 
 
 def unigram_encode(df: DataFrame, id_col: str, text_col: str,
@@ -489,14 +505,6 @@ def unigram_encode(df: DataFrame, id_col: str, text_col: str,
                    F.coalesce("pieces", F.array().cast("array<string>"))
                    .alias("pieces"))
            .withColumn("n_pieces", F.size("pieces")))
-    vocab_release = getattr(vocab, "release_cache", None)
-
-    def _release() -> None:
-        vocab.unpersist()
-        if vocab_release is not None:
-            vocab_release()
-
-    out.release_cache = _release
     return out
 
 
@@ -622,15 +630,13 @@ def unigram_train(df: DataFrame, text_col: str, vocab_size: int = 200,
     words = mat(w.groupBy("__w").agg(F.count("*").alias("__wf")))
     dw = (words.select(F.col("__w").alias("w"), F.col("__wf"))
           .withColumn("n", F.length("w")))
-    seed = unigram_seed_vocab(df, text_col, vocab_size, max_piece_len,
+    seed, freqs = _seed_vocab(df, text_col, vocab_size, max_piece_len,
                               cache_freqs=True)
     vocab = mat(seed.select("piece", F.col("freq").alias("count"),
                             "cost"))
-    seed_release = getattr(seed, "release_cache", None)
-    if seed_release is not None:
-        # the eager checkpoint above just evaluated the seed exactly
-        # once; its internal cache has no further consumer
-        seed_release()
+    # the eager checkpoint above just evaluated the seed exactly once;
+    # its internal cache has no further consumer
+    freqs.unpersist()
     for _ in range(n_iters):
         segs = _viterbi_pieces(dw.select("w", "n"), vocab,
                                unk_cost=1e9, max_l=max_piece_len)

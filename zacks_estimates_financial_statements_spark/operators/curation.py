@@ -1074,8 +1074,8 @@ def bigram_lm_perplexity(df: DataFrame, id_col: str, text_col: str,
     # each of which would otherwise replay the regex tokenize — the
     # most expensive projection in the lineage. Persist it once (r14,
     # the kn_perplexity single-scan pattern); the downstream bigram /
-    # posexplode derivations replay from the cache. Released via the
-    # output's ``release_cache`` hook (chained by perplexity_buckets).
+    # posexplode derivations replay from the cache. Released by the
+    # caller's ``util.query_scope``.
     toks = (df.select(F.col(id_col), _word_array(text_col).alias("__t"))
             .filter(F.size("__t") >= 2)
             .persist(StorageLevel.MEMORY_AND_DISK))
@@ -1116,7 +1116,6 @@ def bigram_lm_perplexity(df: DataFrame, id_col: str, text_col: str,
            .agg(F.count("*").alias("n_bigrams"),
                 F.round(F.exp(F.sum("__nll").cast("double")
                               / F.count("*")), 6).alias("ppl")))
-    out.release_cache = toks.unpersist
     return out
 
 
@@ -1166,8 +1165,7 @@ def kn_perplexity(df: DataFrame, id_col: str, text_col: str,
     # job) and then the probe — so without a persist the regex-heavy
     # tokenize → bigram lineage replays per consumer. Persist it once;
     # the model side projects (w1, w2) from the cache, the probe reads
-    # (id, w1, w2). Released via the output's ``release_cache`` hook
-    # (bench and every gate tool call it per query).
+    # (id, w1, w2). Released by the caller's ``util.query_scope``.
     bi = (toks.select(
         F.col(id_col),
         F.explode_outer(F.arrays_zip(
@@ -1225,7 +1223,6 @@ def kn_perplexity(df: DataFrame, id_col: str, text_col: str,
            .agg(F.count("*").alias("n_bigrams"),
                 F.round(F.exp(F.sum("__nll").cast("double")
                               / F.count("*")), 6).alias("ppl")))
-    out.release_cache = bi.unpersist
     return out
 
 
@@ -1608,10 +1605,8 @@ def dsir_select(raw: DataFrame, target: DataFrame, id_col: str,
     out = scored if n is None else \
         scored.orderBy(F.col("key").desc(), F.col(id_col)).limit(n)
     # The lazy result still reads the persisted ``feats``: its blocks
-    # live until the caller is done with the selection. Call
-    # ``out.release_cache()`` then (the ANN index's unpersist
-    # contract) — recomputation stays correct, just un-cached.
-    out.release_cache = feats.unpersist
+    # live until the caller's ``util.query_scope`` exits —
+    # recomputation after that stays correct, just un-cached.
     return out
 
 
@@ -1647,15 +1642,13 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
     reuse a subtree consumed by two differently-shaped sinks, so
     without it the whole LM-scoring plan — the most expensive stage —
     executes twice (once for the cuts, once for the labeling join).
-    The returned labels read the same cache; call
-    ``out.release_cache()`` when done with the bucketing (the ANN
-    index's unpersist contract).
+    The returned labels read the same cache; run the bucketing inside
+    ``util.query_scope`` to release it (and the LM's token cache).
     """
     q1, q2 = cuts
     if not 0.0 <= q1 < q2 <= 1.0:
         raise ValueError(f"cuts must satisfy 0 <= q1 < q2 <= 1: {cuts}")
     ppl = bigram_lm_perplexity(df, id_col, text_col, alpha=alpha)
-    ppl_release = getattr(ppl, "release_cache", None)
     scored = (ppl.join(df.select(F.col(id_col), F.col(strata_col)),
                        id_col)
               .persist(StorageLevel.MEMORY_AND_DISK))
@@ -1674,13 +1667,6 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
                    .when(F.col("ppl") <= F.col("middle_cut"),
                          F.lit(mid))
                    .otherwise(F.lit(hi)).alias("bucket")))
-
-    def _release(blocking: bool = False) -> None:
-        scored.unpersist(blocking)
-        if ppl_release is not None:   # chain the LM's token cache
-            ppl_release(blocking)
-
-    out.release_cache = _release
     return out
 
 

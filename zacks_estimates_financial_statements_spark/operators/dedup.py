@@ -1271,9 +1271,8 @@ def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
     # across differently-shaped exchanges, so the corpus tokenize +
     # full-text md5 ran ~6x per execution (6 scans in the committed
     # plan). One MEMORY_AND_DISK cache of (id, tokens, fp) replaces
-    # all replays; released via the standard ``release_cache`` hook.
+    # all replays; released by the caller's ``util.query_scope``.
     toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
-    cached = toks
     winner = toks.groupBy(id_col).agg(F.min("__fp").alias("__fp"))
     toks = toks.join(winner, [id_col, "__fp"]).drop("__fp")
     n = F.size("__t")
@@ -1307,11 +1306,9 @@ def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
            .agg(F.concat_ws(" ", F.transform(
                F.array_sort(F.collect_set(F.struct("__p", "__w"))),
                lambda s: s["__w"])).alias("chunk_text")))
-    out = agg.select(
+    return agg.select(
         F.col(id_col), "chunk_idx",
         F.col("__s").cast("bigint").alias("start_word"),
         (F.col("__e") - F.col("__s") + 1).cast("bigint")
         .alias("n_words"),
         F.md5("chunk_text").alias("chunk_hash"), "chunk_text")
-    out.release_cache = cached.unpersist
-    return out

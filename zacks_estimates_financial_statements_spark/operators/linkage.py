@@ -102,8 +102,8 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
     # All three relations are bounded — distinct-KEY scale for the
     # key sides, match-fan-in scale for the pairs — so the caches are
     # small and each input is left with exactly two scans
-    # (distinct-key build + row relation). Released via the standard
-    # ``release_cache`` hook on the returned DataFrame.
+    # (distinct-key build + row relation). Released by the caller's
+    # ``util.query_scope``.
     lall = (left.select(lk).distinct()
             .withColumn("__lnorm", linkage_key(lk))
             .persist(StorageLevel.MEMORY_AND_DISK))
@@ -137,15 +137,7 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
                        left_key, "semi").distinct())
     rrows = (right.join(matched.select(right_key).distinct(),
                         right_key, "semi").distinct())
-    out = lrows.join(matched, left_key).join(rrows, right_key)
-
-    def _release() -> None:
-        matched.unpersist()
-        lall.unpersist()
-        rall.unpersist()
-
-    out.release_cache = _release
-    return out
+    return lrows.join(matched, left_key).join(rrows, right_key)
 
 
 def best_match(pairs: DataFrame, left_id: str, right_id: str) -> DataFrame:

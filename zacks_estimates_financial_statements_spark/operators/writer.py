@@ -722,16 +722,21 @@ class TableStore:
         broadcast hint is size-gated (``util.maybe_broadcast``): an
         oversized key set degrades to an un-hinted join AQE can plan,
         instead of OOMing every executor through a forced broadcast."""
-        from zacks_estimates_financial_statements_spark.util import maybe_broadcast
+        from zacks_estimates_financial_statements_spark.util import (
+            maybe_broadcast, release_checkpoint)
 
         with self.write_lock():
             existing = self.read()
             keys = maybe_broadcast(condemned_keys)
-            if on is not None and condition is None:
-                kept = existing.join(keys, on=on, how="left_anti")
-            else:
-                kept = existing.join(keys, on=condition, how="left_anti")
-            self._overwrite_locked(kept)
+            try:
+                if on is not None and condition is None:
+                    kept = existing.join(keys, on=on, how="left_anti")
+                else:
+                    kept = existing.join(keys, on=condition,
+                                         how="left_anti")
+                self._overwrite_locked(kept)
+            finally:
+                release_checkpoint(keys)
 
 
 def purge_rows(stores: "list[TableStore]", condemned_keys: DataFrame,

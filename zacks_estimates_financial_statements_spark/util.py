@@ -120,11 +120,40 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
 
 
 def release_checkpoint(df) -> None:
-    """Drop the blocks behind a ``localCheckpoint``-ed DataFrame now.
-    Its ``unpersist()`` does nothing: the checkpoint is the persisted RDD
+    """Drop the blocks behind a ``localCheckpoint``-ed DataFrame now
+    (also through ``maybe_broadcast``'s broadcast hint). Its
+    ``unpersist()`` does nothing: the checkpoint is the persisted RDD
     of a ``LogicalRDD``, not a cache-manager entry, so it would otherwise
     stay until the JVM garbage-collects that RDD."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "UnresolvedHint":
+        plan = plan.child()
+    plan.rdd().unpersist(False)
+
+
+@contextlib.contextmanager
+def query_scope(spark: SparkSession):
+    """Release everything one query persisted, in one call: on exit
+    (also after an exception) clear the catalog cache and unpersist
+    every RDD persisted since entry, which covers ``persist()`` caches
+    and ``localCheckpoint``s alike.
+
+    For owners that run ONE query at a time in a session — the bench,
+    the gates and the tests. The exit clears caches other threads of
+    the session may still be reading, so library code that submits
+    work from several threads (``run_statements``, ``load_estimates``)
+    keeps its own ``try``/``finally`` instead. A result that reads a
+    checkpoint cannot be read again after the block exits: consume it
+    (collect, write, explain) inside the block."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        yield
+    finally:
+        spark.catalog.clearCache()
+        for rid, rdd in jsc.getPersistentRDDs().items():
+            if rid not in before:
+                rdd.unpersist(False)
 
 
 def broadcast_threshold_bytes(spark: SparkSession) -> int:
